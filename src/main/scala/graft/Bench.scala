@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Per-round benchmark: times every SparkEntry query at the driver's SF.
@@ -88,8 +88,56 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *      lists and a per-query `runs` map of EVERY timed run (not just
   *      the min), so suspect adjudication can read spread from the
   *      artifact instead of demanding a re-measure (rev 10).
+  *
+  * Failures (rev 11): a run that throws is a FAILURE, never a timing
+  * (see [[Tally]]). The failed query gets no figure in `queries`,
+  * `runs` or the total; the artifact lists it in `"failed":[...]` and
+  * the compact line carries `n_failed` plus a ≤5-name sample.
   */
 object Bench {
+  /** One run of a contract query through the `noop` sink: Right(seconds)
+    * when it completes, Left(error) when it throws. */
+  private[graft] def timeRun(spark: SparkSession, sfDir: String,
+                             fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val error =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+    // queries that persist multi-consumer intermediates (dedup family)
+    // must not leave them pinned — for memory, for self-contained
+    // timings regardless of run order, and so run 2 re-does the I/O
+    spark.catalog.clearCache()
+    val dt = (System.nanoTime() - t0) / 1e9
+    // stage-boundary localCheckpoint blocks are NOT freed by
+    // clearCache (only by ContextCleaner GC, which lags a 396-query
+    // sweep — ADVICE r10); release them OUTSIDE the timed region so
+    // the timing methodology stays byte-identical to rev 9/10
+    graft.ops.releaseStageBoundaries()
+    error.toLeft(dt)
+  }
+
+  /** A sweep's results so far: every successful timed run per query, and
+    * each failed query with its first error. A run that throws fails its
+    * query for good — the query leaves the timed set, so neither a min
+    * nor the total can carry a crash's (typically short) elapsed time. */
+  private[graft] final class Tally {
+    val runs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+
+    def record(name: String, run: Either[String, Double]): Unit = run match {
+      case Left(error) =>
+        failed.getOrElseUpdate(name, error)
+        runs -= name
+      case Right(t) if !failed.contains(name) =>
+        runs(name) = runs.getOrElse(name, Seq.empty) :+ t
+      case Right(_) => ()
+    }
+
+    /** Min of each timed query's runs, in completion order. */
+    def mins: Seq[(String, Double)] = runs.toSeq.map { case (n, ts) => n -> ts.min }
+    def total: Double = mins.map(_._2).sum
+  }
+
   /** Queries whose FIRST run builds fingerprint-keyed persisted state
     * ([[graft.sources.ParquetState]]); run once untimed before the
     * sweep so every timed run serves from state. One name per state
@@ -118,17 +166,11 @@ object Bench {
     val tJvm0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tJvm0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1200").toDouble
     val hardStopS = budgetS * 1.15
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // parity with Verify
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // JVM/codegen/scheduler warmup on synthetic data so the first timed
     // query doesn't absorb session initialization (no fixture data is
     // touched or cached here)
@@ -138,7 +180,7 @@ object Bench {
     // it proportionally, which makes a hot round artifact self-evident.
     def loadProbe(): Double = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0, (1L << 21) * cpus.toLong, 1, cpus.toInt)
+      spark.range(0, (1L << 21) * cpus, 1, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1024))").collect()
       (System.nanoTime() - t0) / 1e9
     }.min
@@ -198,21 +240,14 @@ object Bench {
       selected.toSeq.sortBy { case (n, _) =>
         (if (prior.contains(n)) 1 else 0, prior.getOrElse(n, 0.0), n)
       }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      // queries that persist multi-consumer intermediates (dedup family)
-      // must not leave them pinned — for memory, for self-contained
-      // timings regardless of run order, and so run 2 re-does the I/O
-      spark.catalog.clearCache()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // stage-boundary localCheckpoint blocks are NOT freed by
-      // clearCache (only by ContextCleaner GC, which lags a 396-query
-      // sweep — ADVICE r10); release them OUTSIDE the timed region so
-      // the timing methodology stays byte-identical to rev 9/10
-      graft.ops.releaseStageBoundaries()
-      dt
+    val tally = new Tally
+    // `timed = false` (the pre-warm) records only a failure, never a time
+    def once(name: String, fn: (SparkSession, String) => DataFrame,
+             timed: Boolean = true): Option[Double] = {
+      val run = timeRun(spark, sfDir, fn)
+      run.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      if (run.isLeft || timed) tally.record(name, run)
+      run.toOption.filter(_ => !tally.failed.contains(name))
     }
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def queriesJson(qs: Iterable[(String, Double)]): String =
@@ -259,45 +294,47 @@ object Bench {
       val s = times.sorted
       s.length >= 2 && s(1) <= s(0) * 1.3
     }
-    // kept as ORDERED collections throughout: completion order for the
-    // incremental snapshots (so a killed sweep's artifact reads in sweep
-    // order), re-sorted by name only in the final artifact
-    val partial = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // EVERY timed run per query (first pass + requeue + recheck), not
-    // just the min — file-artifact only; lets a reader adjudicate a
-    // suspect from recorded spread instead of a fresh re-measure
-    val allRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // the tally keeps completion order for the incremental snapshots (so
+    // a killed sweep's artifact reads in sweep order), re-sorted by name
+    // only in the final artifact. `runs` holds EVERY timed run per query
+    // (first pass + requeue + recheck), not just the min — file-artifact
+    // only; lets a reader adjudicate a suspect from recorded spread
+    // instead of a fresh re-measure
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     var warmed = 0
     def runsJson: String =
-      allRuns.map { case (k, ts) => "\"" + k + "\":" + ts.map(f3).mkString("[", ",", "]") }
+      tally.runs.map { case (k, ts) => "\"" + k + "\":" + ts.map(f3).mkString("[", ",", "]") }
         .mkString("{", ",", "}")
+    def failedJson: String = sampleJson(tally.failed.keys, Int.MaxValue)
     def partialJson(trunc: Boolean, extra: String = ""): String = {
-      val total = if (partial.nonEmpty) partial.values.sum else 0.0
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(partial)},""" +
-        s""""sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,"truncated":$trunc,""" +
-        s""""n_done":${partial.size},"n_selected":${selected.size},"warmed":$warmed,""" +
-        s""""settle_waits":$settleWaits,"probe_sec":${f3(probePre)},"runs":$runsJson$extra}"""
+      s"""{"metric":"total","value":${tally.total},"unit":"sec","queries":${queriesJson(tally.mins)},""" +
+        s""""sf":"$sfDir","bench_rev":11,"runs_per_query":$runs,"truncated":$trunc,""" +
+        s""""n_done":${tally.runs.size},"n_selected":${selected.size},"warmed":$warmed,""" +
+        s""""settle_waits":$settleWaits,"probe_sec":${f3(probePre)},"failed":$failedJson,""" +
+        s""""runs":$runsJson$extra}"""
     }
     // every field bounded: top-10 queries, counts + ≤5-name samples.
     // r9's lesson — the 89-name skipped array in the "compact" line blew
     // the driver's tail window and BENCH_r09 parsed null; full lists
     // live only in the file artifact
     def compactOf(full: Boolean): String = {
-      val top10 = partial.toSeq.sortBy(-_._2).take(10)
-      val total = if (partial.nonEmpty) partial.values.sum else 0.0
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},""" +
-        s""""sf":"$sfDir","bench_rev":10,"n_queries":${partial.size},"n_selected":${selected.size},""" +
+      val top10 = tally.mins.sortBy(-_._2).take(10)
+      s"""{"metric":"total","value":${tally.total},"unit":"sec","queries":${queriesJson(top10)},""" +
+        s""""sf":"$sfDir","bench_rev":11,"n_queries":${tally.runs.size},"n_selected":${selected.size},""" +
         s""""truncated":${!full},"warmed":$warmed,"settle_waits":$settleWaits,""" +
         s""""n_skipped":${skipped.size},"skipped_sample":${sampleJson(skipped, 5)},""" +
+        s""""n_failed":${tally.failed.size},"failed_sample":${sampleJson(tally.failed.keys, 5)},""" +
         s""""probe_sec":${f3(probePre)},"full_out":"$out"}"""
+    }
+    def snapshot(): Unit = {
+      snapshotFull = partialJson(trunc = true)
+      snapshotCompact = compactOf(full = false)
+      writeArtifact(snapshotFull)
     }
     // seed the snapshots BEFORE any long-running phase (ADVICE r9): a
     // kill during a minutes-long cold pre-warm previously found
     // snapshotFull empty and left no artifact at all
-    snapshotFull = partialJson(trunc = true)
-    snapshotCompact = compactOf(full = false)
-    writeArtifact(snapshotFull)
+    snapshot()
 
     // pre-warm the persisted-state builders untimed — but ONLY while the
     // projected remaining sweep still fits the budget (rev 10). The
@@ -312,9 +349,8 @@ object Bench {
     val eligibleBuilders = ordered.count { case (n, _) => stateBuilders.contains(n) }
     for ((name, fn) <- ordered if stateBuilders.contains(name) &&
            elapsedS + sweepReserveEst < budgetS * 0.85 && elapsedS < budgetS * 0.4) {
-      val t = once(name, fn)
+      once(name, fn, timed = false).foreach(t => System.err.println(s"[bench] warm $name: ${f3(t)}"))
       warmed += 1
-      System.err.println(s"[bench] warm $name: ${f3(t)}")
     }
     if (warmed == 0 && eligibleBuilders > 0)
       System.err.println(f"[bench] pre-warm skipped: sweep reserve ${sweepReserveEst}%.0f s " +
@@ -351,6 +387,7 @@ object Bench {
     val singleRun = scala.collection.mutable.Set.empty[String]
     val firstPass = ordered.zipWithIndex.flatMap { case ((name, fn), i) =>
       if (elapsedS > hardStopS) { skipped += name; None }
+      else if (tally.failed.contains(name)) None // failed its pre-warm run
       else {
         val reserve = sufPrior(i + 1) * calib + sufUnpriored(i + 1) * avgRun
         val degraded = elapsedS > budgetS ||
@@ -364,31 +401,27 @@ object Bench {
               s"single-run reserve first reached at $i/${ordered.size} — per-query 1-run mode")
           }
         }
-        def timed(): Double = {
-          val t = once(name, fn)
-          runWall += t; runCount += 1
-          t
+        val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+        // false on a failed run, which ends the query's runs
+        def timed(): Boolean = once(name, fn).exists { t =>
+          times += t; runWall += t; runCount += 1
+          true
         }
-        val first = timed()
-        if (priorsArr(i) > 0) { priorSumDone += priorsArr(i); priorObsDone += first }
-        val times = scala.collection.mutable.ArrayBuffer(first)
-        if (!degraded) {
-          while (times.length < runs) times += timed()
-          while (!corroborated(times.toSeq) && times.length < maxRuns)
-            times += timed()
+        if (timed()) {
+          if (priorsArr(i) > 0) { priorSumDone += priorsArr(i); priorObsDone += times.head }
+          if (!degraded) {
+            while (times.length < runs && timed()) ()
+            while (!corroborated(times.toSeq) && times.length < maxRuns && timed()) ()
+          }
         }
         // per-run breakdown to stderr: shows warm-vs-cold effects (e.g. a
         // first run that builds persisted state) that the min hides
         System.err.println(s"[bench] $name runs: " + times.map(f3).mkString(", "))
-        partial(name) = times.min
-        allRuns(name) = times.toSeq
-        snapshotFull = partialJson(trunc = true)
-        snapshotCompact = compactOf(full = false)
-        writeArtifact(snapshotFull)
+        snapshot()
         // a SIGKILL leaves no hook — drop a parseable snapshot line in
         // the stdout tail every 50 queries
         if ((i + 1) % 50 == 0) { println(snapshotCompact); System.out.flush() }
-        Some((name, fn, times.toSeq))
+        Option.when(!tally.failed.contains(name))((name, fn, times.toSeq))
       }
     }
     // RE-QUEUE, don't re-run adjacently: a load burst longer than one
@@ -398,24 +431,18 @@ object Bench {
     // query that exhausted its budget uncorroborated gets two fresh
     // runs at sweep end — minutes later, when the burst has moved on —
     // and reports the min over all runs. Skipped past the wall budget.
-    val requeued = firstPass.map { case (name, fn, times) =>
-      val all =
-        if (corroborated(times) || times.length < 2 || elapsedS > budgetS) times
-        else {
-          val retry = Seq.fill(2)(once(name, fn))
-          System.err.println(s"[bench] $name requeued runs: " + retry.map(f3).mkString(", "))
-          allRuns(name) = allRuns(name) ++ retry
-          times ++ retry
-        }
-      if (all.length > times.length) {
-        partial(name) = all.min
+    val requeued = firstPass.flatMap { case (name, fn, times) =>
+      if (corroborated(times) || times.length < 2 || elapsedS > budgetS)
+        Some((name, fn, times.min))
+      else {
+        val retry = Seq.fill(2)(once(name, fn))
+        System.err.println(s"[bench] $name requeued runs: " +
+          retry.map(_.fold("failed")(f3)).mkString(", "))
         // keep the kill-time snapshot current through this phase too
         // (ADVICE r9: a SIGTERM during requeue flushed a stale snapshot)
-        snapshotFull = partialJson(trunc = true)
-        snapshotCompact = compactOf(full = false)
-        writeArtifact(snapshotFull)
+        snapshot()
+        tally.runs.get(name).map(all => (name, fn, all.min))
       }
-      (name, fn, all.min)
     }
     // CROSS-ROUND corroboration (bench_rev 8; the r7 verdict's fix for
     // the q207/q234 phantom spikes): within-sweep agreement can't see a
@@ -425,19 +452,15 @@ object Bench {
     // run; whatever still exceeds 2x is listed in "suspect":[...] so a
     // reader chases it with a solo re-measure instead of trusting it.
     // Skipped entirely past the wall budget.
-    val crossChecked = requeued.map { case (name, fn, best) =>
+    val crossChecked = requeued.flatMap { case (name, fn, best) =>
       prior.get(name) match {
         case Some(p) if p > 0 && best > p * 2 && elapsedS < budgetS =>
           val again = once(name, fn)
-          System.err.println(f"[bench] $name cross-round recheck: $again%.3f " +
+          System.err.println(s"[bench] $name cross-round recheck: ${again.fold("failed")(f3)} " +
             f"(min was $best%.3f, prior $p%.3f)")
-          allRuns(name) = allRuns(name) :+ again
-          partial(name) = math.min(best, again)
-          snapshotFull = partialJson(trunc = true)
-          snapshotCompact = compactOf(full = false)
-          writeArtifact(snapshotFull)
-          (name, math.min(best, again), p)
-        case _ => (name, best, prior.getOrElse(name, 0.0))
+          snapshot()
+          tally.runs.get(name).map(all => (name, all.min, p))
+        case _ => Some((name, best, prior.getOrElse(name, 0.0)))
       }
     }
     // single-run figures are pre-declared lower-confidence (n_single_run
@@ -461,7 +484,8 @@ object Bench {
     // 9 = incremental artifact + shutdown hook + wall budget + state
     // pre-warm; 10 = value-ordered sweep + prior-priced degrade +
     // cost-aware pre-warm + bounded compact line + atomic writes +
-    // per-query run spreads) — cross-round deltas are only comparable
+    // per-query run spreads; 11 = a failed run fails its query, which
+    // drops out of the total) — cross-round deltas are only comparable
     // at equal rev. Per-era decomposition: the number comparable to the
     // r3 baseline (the r4-era s/q) rides the artifact instead of being
     // re-derived from BASELINE.md each round; eras follow the rounds'
@@ -490,6 +514,7 @@ object Bench {
     val trunc = skipped.nonEmpty
     // full extras (file + full stdout/stderr line): unbounded lists OK
     val extras = s""""eras":$eras,"suspect":$suspectJson,"skipped":$skippedJson,""" +
+      s""""failed":$failedJson,""" +
       s""""truncated":$trunc,"degraded_after":$degradedAfter,"n_single_run":$nSingleRun,""" +
       s""""warmed":$warmed,"wall_sec":${f3(elapsedS)},"runs":$runsJson"""
     // compact extras (the tail-truncation-proof LAST stdout line):
@@ -497,12 +522,13 @@ object Bench {
     // exactly what made BENCH_r09 parse null
     val extrasCompact = s""""eras":$eras,"n_suspect":${suspects.size},""" +
       s""""suspect_sample":${sampleJson(suspects, 5)},"n_skipped":${skipped.size},""" +
-      s""""skipped_sample":${sampleJson(skipped, 5)},"truncated":$trunc,""" +
+      s""""skipped_sample":${sampleJson(skipped, 5)},"n_failed":${tally.failed.size},""" +
+      s""""failed_sample":${sampleJson(tally.failed.keys, 5)},"truncated":$trunc,""" +
       s""""degraded_after":$degradedAfter,"n_single_run":$nSingleRun,""" +
       s""""warmed":$warmed,"wall_sec":${f3(elapsedS)}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results)},"sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,$probes,$extras}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results)},"sf":"$sfDir","bench_rev":11,"runs_per_query":$runs,$probes,$extras}"""
     val top10 = results.sortBy(-_._2).take(10)
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},"sf":"$sfDir","n_queries":${results.size},"runs_per_query":$runs,"bench_rev":10,$probes,$extrasCompact,"full_out":"$out"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},"sf":"$sfDir","n_queries":${results.size},"runs_per_query":$runs,"bench_rev":11,$probes,$extrasCompact,"full_out":"$out"}"""
     System.err.println(json)
     System.err.flush()
     println(json)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev utility: write `explain("formatted")` for named contract queries
@@ -14,12 +13,7 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus(8), logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
     // Name resolution (ADVICE r10): exact match, else UNIQUE prefix —
     // `q31` must never silently pick q319_bbit_minhash over
@@ -30,13 +24,13 @@ object PlanDump {
     def resolve(t: String): String = {
       val keys = SparkEntry.queries.keys.toSeq.sorted
       if (keys.contains(t)) t
-      else keys.filter(k => k.startsWith(t + "_") || k.startsWith(t)) match {
+      else keys.filter(_.startsWith(t)) match {
         case Seq(one) => one
         case Seq() => sys.error(s"[plandump] no such query: $t")
         case many => many.filter(_.startsWith(t + "_")) match {
           case Seq(one) => one
-          case _ => sys.error(
-            s"[plandump] ambiguous token $t: ${many.mkString(", ")}")
+          case Seq() => sys.error(s"[plandump] ambiguous token $t: ${many.mkString(", ")}")
+          case refined => sys.error(s"[plandump] ambiguous token $t: ${refined.mkString(", ")}")
         }
       }
     }

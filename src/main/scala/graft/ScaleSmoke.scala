@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling smoke (SCALE.md "Empirical scaling smoke"): generate
@@ -22,14 +21,8 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(8)
+    val spark = GraftSession.local(cpus)
 
     val dir = Files.createTempDirectory("graft-smoke").toString
     val nDocs = 5000L * mult
@@ -86,7 +79,7 @@ object ScaleSmoke {
     }
     import spark.implicits._
     rows.toSeq.toDF("vec_id", "embedding", "label")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     val targets = Seq(

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.StreamingOps
 
 /** Runnable streaming showcase: replays an events fixture through the
@@ -16,14 +14,7 @@ object StreamingMain {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("tumbling")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-streaming")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-streaming")
 
     val staged = Files.createTempDirectory("graft-stream-main").toString
     Files.copy(Paths.get(s"$sfDir/events.parquet"),

@@ -48,7 +48,7 @@ object Graph {
     * the simhash-vocabulary OOM class. Under the budget the hint keeps
     * the per-round join shuffle-free; above it the walkers fall back to
     * a plain key-partitioned join against an edge relation
-    * CO-PARTITIONED ONCE on the join key ([[pinEdges]]), so each round
+    * CO-PARTITIONED ONCE on the join key ([[RoundEdges]]), so each round
     * still shuffles only the node-sized side. The default is DERIVED,
     * not a constant: `spark.sql.autoBroadcastJoinThreshold` ÷
     * [[NodeRowBytes]], so the ONE conf every Spark operator already
@@ -83,35 +83,100 @@ object Graph {
   private[graft] def gateBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows <= broadcastNodeBudget(df.sparkSession)) broadcast(df) else df
 
-  /** Re-materialize an already-persisted relation hash-partitioned on
-    * `key` ONCE (count() forces the partitioned cache before any round
-    * reads it, then the unpartitioned copy is released) — the shared
-    * over-budget fallback of every round loop: after this, each
-    * round's node-relation join reuses the edge partitioning and
-    * shuffles only the node-sized side. */
-  private def copartitionOnce(raw: DataFrame, key: String): DataFrame = {
-    val p = raw.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    raw.unpersist()
-    p
+  /** An edge relation pinned for round joins on `keys` (the first is the
+    * default join key). A round loop joins a node-sized relation — rank,
+    * label, frontier, color delta — into the SAME edges every round, and
+    * this device alone decides that join's plan from the node side's
+    * measured row count:
+    *
+    *   - while `rows` ≤ [[broadcastNodeBudget]] the node side is
+    *     broadcast, so the round moves no edge bytes. The gate reads the
+    *     MEASURED count of each round, not a static hint: a frontier can
+    *     grow from seed-sized to graph-sized in two rounds, and a
+    *     data-proportional relation may never be force-broadcast;
+    *   - the first join over the budget re-materializes the edges
+    *     hash-partitioned on every key, ONCE, and every later join (over
+    *     the budget or not) reads those copies. An over-budget round then
+    *     shuffles only its node side; the edge shuffle is paid once per
+    *     loop, never per round. The unpartitioned copy is released as soon
+    *     as all key copies exist — for loops joining on src AND dst (HITS,
+    *     SCC) that is after both are built, since each is built from it.
+    *
+    * `edges` must already be pinned by the caller (persisted, or a stage
+    * boundary): the device decides join plans, not the edges' lifetime. */
+  private[graft] final class RoundEdges(edges: DataFrame, keys: String*) {
+    private val budget = broadcastNodeBudget(edges.sparkSession)
+    private var partitioned = Option.empty[Map[String, DataFrame]]
+
+    /** `edges ⋈ nodes` on `key`; `rows` is the node side's row count. */
+    def join(nodes: DataFrame, rows: Long, key: String = keys.head): DataFrame =
+      if (rows <= budget) partitioned.fold(edges)(_(key)).join(broadcast(nodes), Seq(key))
+      else copartitionOnce()(key).join(nodes, Seq(key))
+
+    /** Unpersist the partitioned copies (loops that re-pin a shrinking
+      * edge set every outer round). */
+    def release(): Unit = partitioned.foreach(_.values.foreach(_.unpersist()))
+
+    private def copartitionOnce(): Map[String, DataFrame] = partitioned.getOrElse {
+      val copies = keys.map { k =>
+        val p = edges.repartition(col(k)).persist(StorageLevel.MEMORY_AND_DISK)
+        p.count() // materialize before the unpartitioned copy goes
+        k -> p
+      }.toMap
+      edges.unpersist()
+      partitioned = Some(copies)
+      copies
+    }
   }
 
   /** Pin an edge relation for a round loop: persist it, derive the
-    * src-keyed degree relation and the node count, and — when the node
-    * relation exceeds the broadcast budget — re-materialize the edges
-    * hash-partitioned on `key` ONCE, so every round's node-relation
-    * join reuses the edge partitioning and shuffles only the node-sized
-    * side (one shuffle per round of the SMALL side, never the edges). */
+    * src-keyed degree relation and the node count (one job, which also
+    * materializes both persists before round 1), and wrap the edges in a
+    * [[RoundEdges]] keyed on `key`. */
   private[graft] def pinEdges(edges: DataFrame, key: String = "src"):
-      (DataFrame, DataFrame, Long) = {
+      (RoundEdges, DataFrame, Long) = {
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
     val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = deg.count() // also materializes both persists before round 1
-    val e =
-      if (n <= broadcastNodeBudget(edges.sparkSession)) raw
-      else copartitionOnce(raw, key)
-    (e, deg, n)
+    (new RoundEdges(raw, key), deg, deg.count())
+  }
+
+  /** One round of [[levels]] as its step function sees it: `round` is
+    * the number of the level being built (1-based), `frontier` the
+    * previous level and `seen` every level so far, both materialized.
+    * Their row counts are LAZY — a step that gates on something else
+    * (a known node count) pays no count job — and `seenRows` is summed
+    * from the level counts, with no job of its own. */
+  private[graft] final class Round(val round: Int, val frontier: DataFrame,
+                                   val seen: DataFrame, prior: Option[Round]) {
+    lazy val rows: Long = frontier.count()
+    lazy val seenRows: Long = rows + prior.fold(0L)(_.seenRows)
+  }
+
+  /** Level-synchronous frontier expansion, the one loop of every BFS-
+    * shaped operator: `seed` is level 0, and `next` builds level
+    * `round` from the [[Round]] it is given — already anti-joined
+    * against `seen`, in `seed`'s columns — so each node enters exactly
+    * one level (total work O(m) across rounds, not O(m·rounds)).
+    * Returns the union of all levels.
+    *
+    * Every level but the last is materialized with `stageBoundary`
+    * because it feeds two consumers: the next round's frontier and the
+    * seen set. The seen set is re-materialized too: the next anti-join
+    * would otherwise re-read an r-deep union per task (measured ~1.5–2×
+    * slower without it on q396 at sf0.1). After the LAST round neither
+    * holds: the final level's one consumer is the returned union, and
+    * nothing anti-joins the seen set again, so a barrier there would be
+    * a pure extra copy (and its count a pure extra job) — the final
+    * level stays lazy and is computed inside the caller's action. */
+  private[graft] def levels(seed: DataFrame, maxRounds: Int)(next: Round => DataFrame): DataFrame = {
+    val level0 = seed.stageBoundary
+    var r = new Round(1, level0, level0, None)
+    for (h <- 2 to maxRounds) {
+      val level = next(r).stageBoundary
+      r = new Round(h, level, r.seen.unionByName(level).stageBoundary, Some(r))
+    }
+    if (maxRounds < 1) level0 else r.seen.unionByName(next(r))
   }
 
   /** One-hop co-occurrence edges of `df`: distinct (src, dst) pairs of
@@ -193,13 +258,13 @@ object Graph {
     * damping blend rank' = tele(part) + floor(0.85·Σ c) against the
     * (part, tele) relation. A damping or flooring fix lands in exactly
     * one place for every walker. */
-  private def walkRound(e: DataFrame, deg: DataFrame, seeded: DataFrame,
+  private def walkRound(e: RoundEdges, deg: DataFrame, seeded: DataFrame,
                         rank: DataFrame, nNodes: Long): DataFrame = {
     val contrib = e
-      .join(gateBroadcast(rank
+      .join(rank
         .join(deg, rank("part") === deg("src"))
         .withColumn("c", expr("CAST(FLOOR(CAST(rank AS DOUBLE) / d) AS BIGINT)"))
-        .select(col("src"), col("c")), nNodes), Seq("src"))
+        .select(col("src"), col("c")), nNodes)
       .groupBy(col("dst")).agg(sum(col("c")).as("inc"))
     seeded
       .join(contrib, col("part") === contrib("dst"), "left")
@@ -208,7 +273,7 @@ object Graph {
           "CAST(FLOOR(0.85D * CAST(COALESCE(inc, CAST(0 AS BIGINT)) AS DOUBLE)) AS BIGINT)")).as("rank"))
   }
 
-  private def walkRounds(e: DataFrame, deg: DataFrame, seeded: DataFrame,
+  private def walkRounds(e: RoundEdges, deg: DataFrame, seeded: DataFrame,
                          init: DataFrame, rounds: Int, nNodes: Long): DataFrame = {
     var rank = init
     for (_ <- 1 to rounds) rank = walkRound(e, deg, seeded, rank, nNodes)
@@ -249,10 +314,7 @@ object Graph {
     val (e, deg, n) = pinEdges(edges, key = "dst")
     var lab = deg.select(col("src").as("node"), col("src").as("label"))
     for (_ <- 1 to rounds) {
-      // the label relation is node-sized and data-proportional: hinted
-      // only under the budget, else a plain join against the
-      // dst-partitioned edges (one-sided node-relation shuffle/round)
-      lab = e.join(gateBroadcast(lab, n), e("dst") === lab("node"))
+      lab = e.join(lab.select(col("node").as("dst"), col("label")), n)
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
         // argmax(cnt) with lowest-label ties: max over (cnt, -label)
         .groupBy(col("src"))
@@ -655,41 +717,14 @@ object Graph {
     * analysis on a dependency graph). Unweighted shortest paths need no
     * priority queue: level-synchronous expansion IS Dijkstra here.
     *
-    * Scale posture: each round expands ONLY the newly-discovered frontier
-    * (a node enters exactly one frontier, so every edge is relaxed at most
-    * once per endpoint discovery — total work O(m) across all rounds, not
-    * O(m·rounds) as the naive expand-everything-known formulation pays; the
-    * oracle keeps that full-union form, proving the two equal). The
-    * accumulated distance relation is node-sized and eagerly
-    * localCheckpoint-ed per round so round r's anti-join reads a
-    * materialized frame, not an r-deep plan. The frontier join is gated
-    * PER ROUND on the frontier's known size (each round's frontier is
-    * already materialized, so the count is a cache read): a BFS frontier
-    * starts seed-sized and can grow to graph-sized in two hops, so a
-    * static hint is wrong in both directions — the first over-budget
-    * round co-partitions the edges once and later rounds shuffle only
-    * the frontier. */
+    * Scale posture: a [[levels]] loop over [[RoundEdges]] — each round
+    * expands only the newly-discovered frontier (the oracle keeps the
+    * naive expand-everything-known form, proving the two equal). */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var e = raw
-    var parted = false
-    var dist = seeds.distinct()
-      .select(col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundary
-    var frontier = dist.select(col("node"))
-    var frontierRows = dist.count()
-    // running size of the accumulated relation — every round's frontier
-    // count is already measured, so the anti-join side's row count is
-    // known without an extra job
-    var distRows = frontierRows
+    val e = new RoundEdges(edges.persist(StorageLevel.MEMORY_AND_DISK), "src")
     val budget = broadcastNodeBudget(edges.sparkSession)
-    for (h <- 1 to maxHops) {
-      if (!parted && frontierRows > budget) {
-        e = copartitionOnce(raw, "src")
-        parted = true
-      }
-      val matched = e
-        .join(gateBroadcast(frontier.select(col("node").as("src")), frontierRows), Seq("src"))
+    levels(seeds.distinct().select(col("seed").as("node"), lit(0L).as("hops")), maxHops) { r =>
+      val matched = e.join(r.frontier.select(col("node").as("src")), r.rows)
         .select(col("dst").as("node"))
       // r11 (guide §2.3 prune before the exchange): while the seen set
       // fits the broadcast budget, anti-join it BELOW the distinct — in
@@ -700,25 +735,12 @@ object Graph {
       // back — both orders are exactly equal (the anti predicate is a
       // per-row filter on `node`, so dedup-then-filter ≡ filter-then-
       // dedup).
-      val next = (if (distRows <= budget)
-          matched.join(gateBroadcast(dist.select(col("node")), distRows),
-            Seq("node"), "left_anti").distinct()
+      (if (r.seenRows <= budget)
+          matched.join(broadcast(r.seen.select(col("node"))), Seq("node"), "left_anti").distinct()
         else
-          matched.distinct().join(dist, Seq("node"), "left_anti"))
-        .select(col("node"), lit(h.toLong).as("hops"))
-        .stageBoundary
-      frontier = next.select(col("node"))
-      frontierRows = next.count()
-      distRows += frontierRows
-      // the accumulated relation re-checkpoints only while another
-      // round will anti-join against it; after the LAST hop it has one
-      // consumer (the caller's aggregate), and both union legs are
-      // already materialized — a final checkpoint was a pure extra
-      // barrier copy (r10)
-      dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-             else dist.unionAll(next)
+          matched.distinct().join(r.seen, Seq("node"), "left_anti"))
+        .select(col("node"), lit(r.round.toLong).as("hops"))
     }
-    dist
   }
 
   /** One unrolled oracle BFS round k over CTEs e/d{k-1}: the full-union
@@ -914,17 +936,15 @@ object Graph {
       .distinct()
       .stageBoundary // node-sized; seeds init AND every round's blend
     val nV = nodes.count()
-    val e =
-      if (nV <= broadcastNodeBudget(edges.sparkSession)) raw
-      else copartitionOnce(raw, "src")
+    val e = new RoundEdges(raw, "src")
     var rank = nodes.withColumn("rank", lit(RankScale))
     for (_ <- 1 to rounds) {
       val withDeg = rank.join(deg, rank("part") === deg("src"), "left")
         .select(col("part"), col("rank"), col("d"))
       val contrib = e
-        .join(gateBroadcast(withDeg.filter(col("d").isNotNull)
+        .join(withDeg.filter(col("d").isNotNull)
           .withColumn("c", expr("CAST(FLOOR(CAST(rank AS DOUBLE) / d) AS BIGINT)"))
-          .select(col("part").as("src"), col("c")), nV), Seq("src"))
+          .select(col("part").as("src"), col("c")), nV)
         .groupBy(col("dst")).agg(sum(col("c")).as("inc"))
       val dang = withDeg.filter(col("d").isNull)
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
@@ -1244,47 +1264,23 @@ object Graph {
   /** PER-SEED BFS ([[bfsDistances]] generalized from min-over-the-set
     * to per-seed distances): state and frontier are (seed, node) keyed,
     * so memory is |seeds| × reach — the standard sampled-centrality
-    * budget. Same round mechanics: frontier-only expansion, per-round
-    * localCheckpoint, gated frontier broadcast with the one-time edge
-    * co-partition fallback above the budget. */
+    * budget. */
   private[graft] def bfsPerSeed(edges: DataFrame, seeds: DataFrame,
                                 maxHops: Int): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var e = raw
-    var parted = false
-    var dist = seeds.distinct()
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundary
-    var frontier = dist.select(col("seed"), col("node"))
-    var frontierRows = dist.count()
-    val budget = broadcastNodeBudget(edges.sparkSession)
-    for (h <- 1 to maxHops) {
-      if (!parted && frontierRows > budget) {
-        e = copartitionOnce(raw, "src")
-        parted = true
-      }
+    val e = new RoundEdges(edges.persist(StorageLevel.MEMORY_AND_DISK), "src")
+    val seed = seeds.distinct().select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
+    levels(seed, maxHops) { r =>
       // NOTE (r11 A/B): the bfsDistances prune-below-the-distinct device
       // was tried here too and measured WORSE (5.14 → 5.63 s at sf0.1,
       // corroborated) — the per-seed anti side is (seed, node)-keyed and
       // ~|seeds|× larger, so the per-round broadcast build of the
       // growing accumulated relation costs more than the distinct
       // shuffle it saves. Kept in the min-over-set BFS only.
-      val next = e
-        .join(gateBroadcast(frontier.select(col("seed"), col("node").as("src")),
-          frontierRows), Seq("src"))
+      e.join(r.frontier.select(col("seed"), col("node").as("src")), r.rows)
         .select(col("seed"), col("dst").as("node")).distinct()
-        .join(dist, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h.toLong).as("hops"))
-        .stageBoundary
-      frontier = next.select(col("seed"), col("node"))
-      frontierRows = next.count()
-
-      // same last-hop rule as [[bfsDistances]]: no barrier copy after
-      // the final anti-join consumer is gone (r10)
-      dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-             else dist.unionAll(next)
+        .join(r.seen, Seq("seed", "node"), "left_anti")
+        .select(col("seed"), col("node"), lit(r.round.toLong).as("hops"))
     }
-    dist
   }
 
   /** One unrolled per-seed oracle BFS round k over CTEs e/h{k−1}. */
@@ -1504,11 +1500,10 @@ object Graph {
     *
     * Scale posture: trim and sweep joins put the NODE-sized relation
     * (core set, color delta, backward frontier) on the build side via
-    * [[gateBroadcast]]; over budget the subgraph is co-partitioned
-    * once per outer round on each join key (src for the forward
-    * color join, dst for the backward sweep — the MIS/HITS both-keys
-    * discipline), so every inner round shuffles only the shrinking
-    * label relation. */
+    * [[gateBroadcast]]; the color and sweep rounds join a [[RoundEdges]]
+    * pinned per outer round on src (forward color join) and dst
+    * (backward sweep), so over budget every inner round shuffles only
+    * the shrinking label relation. */
   def sccCyclic(edges: DataFrame, maxOuter: Int = 64, maxInner: Int = 300): DataFrame = {
     val eAll = edges.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1547,9 +1542,7 @@ object Graph {
         val nodes = sub.select(col("src").as("v"))
           .union(sub.select(col("dst").as("v"))).distinct().stageBoundary
         val nNodes = nodes.count()
-        val overBudget = nNodes > broadcastNodeBudget(sub.sparkSession)
-        val eFwd = if (overBudget) copartitionOnce(sub, "src") else sub
-        val eBwd = if (overBudget) copartitionOnce(sub, "dst") else sub
+        val e = new RoundEdges(sub, "src", "dst")
         // (2) forward max-color propagation, semi-naive
         var colors = nodes.select(col("v"), col("v").as("c")).stageBoundary
         var delta = colors
@@ -1558,9 +1551,7 @@ object Graph {
         while (dn > 0) {
           inner += 1
           require(inner <= maxInner, s"color propagation exceeded $maxInner rounds")
-          val cand = eFwd
-            .join(gateBroadcast(delta.select(col("v").as("src"), col("c").as("cs")), dn),
-              Seq("src"))
+          val cand = e.join(delta.select(col("v").as("src"), col("c").as("cs")), dn)
             .groupBy(col("dst")).agg(max(col("cs")).as("cand"))
             .select(col("dst").as("v"), col("cand"))
           delta = cand.join(colors, Seq("v"))
@@ -1590,8 +1581,7 @@ object Graph {
         while (bn > 0) {
           inner += 1
           require(inner <= maxInner, s"backward sweep exceeded $maxInner rounds")
-          val preds = eBwd
-            .join(gateBroadcast(bd.select(col("v").as("dst"), col("c")), bn), Seq("dst"))
+          val preds = e.join(bd.select(col("v").as("dst"), col("c")), bn, key = "dst")
             .select(col("src").as("v"), col("c")).distinct()
             .join(colors.select(col("v"), col("c").as("vc")), Seq("v"))
             .filter(col("c") === col("vc"))
@@ -1613,7 +1603,7 @@ object Graph {
           .join(gateBroadcast(reached.select(col("v").as("dst")), nReached),
             Seq("dst"), "left_anti")
           .select(col("src"), col("dst")).stageBoundary
-        if (overBudget) { eFwd.unpersist(); eBwd.unpersist() }
+        e.release()
       }
     }
     val nontrivial = if (out.isEmpty) emptyOut else out.reduce(_ unionByName _)
@@ -1848,38 +1838,27 @@ object Graph {
     * integer divide — see [[normSqlExpr]]), so the trajectory is
     * engine-order-independent and the oracle unrolls it verbatim.
     *
-    * Scale posture (100 TB crawl graph): the edge relation is persisted
-    * once and, over the broadcast budget, co-partitioned on src; each
-    * half-step is one gated node-relation join into the pinned edges +
-    * one map-side-combined sum + a ONE-ROW max that rides a broadcast —
-    * the authority step joins on src and the hub step on dst, so the
-    * over-budget path pins one copy per key (two edge-sized
-    * materializations, once, not per round). Rounds are a fixed small
+    * Scale posture (100 TB crawl graph): each half-step is one
+    * node-relation join into a [[RoundEdges]] + one map-side-combined
+    * sum + a ONE-ROW max that rides a broadcast — the authority step
+    * joins on src and the hub step on dst, so the edges are pinned on
+    * both keys (over budget: two edge-sized materializations, once,
+    * not per round). Rounds are a fixed small
     * constant. The rescale bounds every score at ~2·10⁶, so round
     * sums stay ≤ 2·10⁶ · max-degree — no overflow at any realistic
     * degree. */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
-    val s = edges.sparkSession
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
       .stageBoundary // node-sized; seeds both score vectors
     val nV = nodes.count()
-    val (eSrc, eDst) =
-      if (nV <= broadcastNodeBudget(s)) (raw, raw)
-      else {
-        // build the dst copy while raw is still cached: copartitionOnce
-        // unpersists raw as its last act
-        val d = raw.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-        d.count()
-        (copartitionOnce(raw, "src"), d)
-      }
+    val e = new RoundEdges(raw, "src", "dst")
     var hub = nodes.withColumn("h", lit(RankScale))
     var auth = nodes.withColumn("a", lit(0L))
     for (_ <- 1 to rounds) {
-      val aRaw = eSrc
-        .join(gateBroadcast(hub.select(col("part").as("src"), col("h")), nV), Seq("src"))
+      val aRaw = e.join(hub.select(col("part").as("src"), col("h")), nV)
         .groupBy(col("dst")).agg(sum(col("h")).as("a_raw"))
       val aMax = aRaw.agg(greatest(max(col("a_raw")), lit(1L)).as("amx"))
       // checkpoint each node-sized half-step: the broadcast max and the
@@ -1889,8 +1868,7 @@ object Graph {
         .select(col("part"),
           expr(normSqlExpr("COALESCE(a_raw, 0L)", "amx")).as("a"))
         .stageBoundary
-      val hRaw = eDst
-        .join(gateBroadcast(auth.select(col("part").as("dst"), col("a")), nV), Seq("dst"))
+      val hRaw = e.join(auth.select(col("part").as("dst"), col("a")), nV, key = "dst")
         .groupBy(col("src")).agg(sum(col("a")).as("h_raw"))
       val hMax = hRaw.agg(greatest(max(col("h_raw")), lit(1L)).as("hmx"))
       hub = nodes.join(hRaw, col("part") === hRaw("src"), "left")
@@ -2396,41 +2374,22 @@ object Graph {
 
   /** The q396 algebra over a pinned edge relation, a seed set, and a
     * (seed, step, node) corpus. Exposed for the hand-computed spec.
-    * `nNodes` gates the frontier broadcasts (the [[pinEdges]] caller
-    * already knows it — the frontier is bounded by the node set). */
-  def walkCoverage(e: DataFrame, seeds: DataFrame, corpus: DataFrame,
+    * `nNodes` gates the frontier joins (the [[pinEdges]] caller already
+    * knows it — the frontier is bounded by the node set), so the
+    * [[levels]] loop counts nothing. A node joins the seen set the
+    * first round it appears, which IS its BFS distance. */
+  def walkCoverage(e: RoundEdges, seeds: DataFrame, corpus: DataFrame,
                    maxStep: Int, nNodes: Long): DataFrame = {
     val s = seeds.sparkSession
-    var seen = seeds.withColumn("d", lit(0)).stageBoundary
-    var frontier = seeds
-    for (t <- 1 to maxStep) {
-      // frontier-sized expansion, anti-joined against everything seen —
-      // min-distance falls out structurally (a node joins `seen` the
-      // first round it appears, which IS its BFS distance).
+    val seen = levels(seeds.withColumn("d", lit(0)), maxStep) { r =>
       // NOTE (r11 A/B): the bfsDistances prune-below-the-distinct was
       // tried here and measured worse (4.95 → 5.32 s at sf0.1) — the
       // walk corpus's reach saturates by round 2, so the anti side is
-      // near-graph-sized while the distinct's output is tiny either
-      // way; reverted, the last-hop barrier skip below kept.
-      val grown = e
-        .join(gateBroadcast(frontier.select(col("node").as("src")), nNodes), Seq("src"))
+      // near-graph-sized while the distinct's output is tiny either way.
+      e.join(r.frontier.select(col("node").as("src")), nNodes)
         .select(col("dst").as("node")).distinct()
-        .join(seen, Seq("node"), "left_anti")
-        .withColumn("d", lit(t))
-      // r11 (the r10 bfsDistances last-hop rule): on the FINAL round
-      // next has ONE consumer (the seen union feeding the aggregate)
-      // and seen is never anti-joined again — both barriers were pure
-      // extra materialization copies; skip them.
-      val next = if (t < maxStep) grown.stageBoundary // feeds seen AND next frontier
-                 else grown
-      // seen IS re-materialized per intermediate round even though each
-      // level frame is already materialized: the next round's anti-join
-      // otherwise re-reads the whole union per task (measured ~1.5-2x
-      // slower without this at sf0.1, cold-JVM min-of-4 12.1 vs 7.8 s —
-      // the q370 "fewer jobs" inversion again)
-      seen = if (t < maxStep) seen.unionByName(next).stageBoundary
-             else seen.unionByName(next)
-      frontier = next.select(col("node"))
+        .join(r.seen, Seq("node"), "left_anti")
+        .withColumn("d", lit(r.round))
     }
     val vis = corpus.groupBy(col("node")).agg(min(col("step")).as("s"))
     val looks = s.range(0, maxStep + 1).select(col("id").as("k"))
@@ -2618,20 +2577,12 @@ object Graph {
     // and the backward δ join (the naive form expanded edges×frontier
     // five times; the fused form three times, the two widest reused
     // from cache — measured ~30% at sf0.1). Frontiers grow to
-    // |seeds|×reach, so past the broadcast budget the edges re-pin
-    // src-co-partitioned ONCE (the bfsPerSeed discipline) and every
-    // later expansion shuffles only the frontier side.
-    var e = edges
-    var parted = false
-    def expandFrom(lower: DataFrame, rows: Long): DataFrame = {
-      if (!parted && rows > broadcastNodeBudget(edges.sparkSession)) {
-        e = copartitionOnce(edges, "src")
-        parted = true
-      }
-      e.join(gateBroadcast(lower.select(col("seed"), col("node").as("src"),
-          col("node").as("vnode"), col("sig").as("vsig")), rows), Seq("src"))
+    // |seeds|×reach, so each expansion is a gated [[RoundEdges]] join.
+    val e = new RoundEdges(edges, "src")
+    def expandFrom(lower: DataFrame, rows: Long): DataFrame =
+      e.join(lower.select(col("seed"), col("node").as("src"),
+          col("node").as("vnode"), col("sig").as("vsig")), rows)
         .select(col("seed"), col("vnode"), col("vsig"), col("dst").as("node"))
-    }
     def levelOf(ex: DataFrame, excl: Seq[DataFrame]): DataFrame = {
       val cand = ex.groupBy(col("seed"), col("node")).agg(sum(col("vsig")).as("sig"))
       // one fused anti-join against the UNION of visited levels, not one
@@ -2851,8 +2802,7 @@ object Graph {
     var color = deg.select(col("src").as("v"), col("d").cast("long").as("c"))
       .stageBoundary
     for (_ <- 1 to rounds) {
-      color = e
-        .join(gateBroadcast(color.select(col("v").as("dst"), col("c").as("nc")), n), Seq("dst"))
+      color = e.join(color.select(col("v").as("dst"), col("c").as("nc")), n)
         .groupBy(col("src"))
         .agg(expr("concat_ws(',', transform(array_sort(collect_list(nc)), x -> CAST(x AS STRING)))").as("s"))
         .join(gateBroadcast(color.select(col("v").as("src"), col("c")), n), Seq("src"))

@@ -45,17 +45,26 @@ package object ops {
 
   /** Unpersisting a locally-checkpointed RDD is deliberate here (the
     * query's action has consumed it), but each call logs a WARN
-    * ("lineage has been truncated…") — ~160 boundaries × 396 queries of
-    * pure noise. Quiet exactly that logger namespace, once. */
+    * ("RDD n was locally checkpointed, its lineage has been truncated…")
+    * — ~160 boundaries × 396 queries of pure noise. `RDD.unpersist`
+    * logs it under the concrete RDD's class, and every registered
+    * boundary RDD is the `MapPartitionsRDD` that `Dataset.localCheckpoint`
+    * builds, so quiet exactly that logger, once — warnings from every
+    * other RDD class still show. */
   private lazy val quietRddLogger: Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
   /** Unpersist every stage-boundary block registered since the last
     * drain (harness calls this between queries, OUTSIDE any timed
     * region). Blocks are dropped non-blocking; a boundary DataFrame
-    * must not be re-read after its query's action completes. */
+    * must not be re-read after its query's action completes.
+    *
+    * Queries must run SEQUENTIALLY around a drain: the registry is
+    * global, so a drain unpersists every registered boundary, including
+    * those of a query still in flight on another thread — whose
+    * truncated lineage then cannot be recomputed, and which fails. */
   def releaseStageBoundaries(): Unit = {
     quietRddLogger
     var ref = boundaryRdds.poll()

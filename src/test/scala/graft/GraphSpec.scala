@@ -174,21 +174,27 @@ class GraphSpec extends SparkSpec {
     val e = edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
     val dirE = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("seed")
+    // q340's seed shape: the lowest source keys of the degree relation
+    val lowSeeds = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .orderBy(col("src")).limit(2).select(col("src").as("seed"))
+    val chain = edges((1L, 2L), (2L, 3L))
     def all() = Seq(
       Graph.pagerank(e, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.labelPropagation(e, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.bfsDistances(e, seeds, maxHops = 3).collect().map(_.toString).sorted.toSeq,
+      Graph.bfsPerSeed(e, lowSeeds, maxHops = 3).collect().map(_.toString).sorted.toSeq,
       Graph.pagerankDirected(dirE, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.hits(dirE, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.walkCorpus(e, steps = 3, seedMod = 1).collect().map(_.toString).sorted.toSeq,
       Graph.node2vecWalks(e, steps = 3, seedMod = 1).collect().map(_.toString).sorted.toSeq,
       Graph.sccCyclic(e.unionByName(dirE)).collect().map(_.toString).sorted.toSeq,
       Graph.betweennessSampled(e, seeds).collect().map(_.toString).sorted.toSeq,
+      Graph.betweennessSampled(chain, seeds).collect().map(_.toString).sorted.toSeq,
       Graph.modularityOf(e, Graph.labelPropagation(e, rounds = 2))
         .collect().map(_.toString).sorted.toSeq,
       Graph.misByHash(e).collect().map(_.toString).sorted.toSeq,
       Graph.wlColors(e, rounds = 2).collect().map(_.toString).sorted.toSeq,
-      Graph.walkCoverage(e, Seq(1L).toDF("node"),
+      Graph.walkCoverage(new Graph.RoundEdges(e, "src"), Seq(1L).toDF("node"),
           Graph.walkCorpus(e, steps = 3, seedMod = 1), maxStep = 3, nNodes = 5)
         .collect().map(_.toString).sorted.toSeq)
     val key = "spark.graft.graph.broadcastNodeBudget"
@@ -201,6 +207,62 @@ class GraphSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("RoundEdges over the budget co-partitions the edges once across rounds") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val key = "spark.graft.graph.broadcastNodeBudget"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "0")
+      val raw = edges((1L, 2L), (2L, 3L), (3L, 4L)).persist()
+      val e = new Graph.RoundEdges(raw, "src")
+      // each round's cached edge copy is resolved before the next round runs
+      val rounds = (1L to 3L).map { v =>
+        val j = e.join(Seq(v).toDF("src"), rows = 1)
+        (j.count(), j.queryExecution.withCachedData.collect { case m: InMemoryRelation => m.cacheBuilder })
+      }
+      assert(rounds.map(_._1) == Seq(1L, 2L, 2L))
+      val copies = rounds.flatMap(_._2)
+      assert(copies.size == 3 && copies.forall(_ eq copies.head),
+        "every round must read one and the same partitioned copy")
+      assert(copies.head.cachedPlan.toString.contains("hashpartitioning(src"),
+        copies.head.cachedPlan.toString)
+      assert(raw.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the unpartitioned copy must be released")
+      e.release()
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("levels: every level but the last is materialized, the last stays lazy") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a union leg may sit under a by-name column projection
+    def leg(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => leg(child)
+      case other => other
+    }
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val handed = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val out = Graph.levels(Seq(1L).toDF("node").withColumn("d", lit(0)), maxRounds = 3) { r =>
+      handed ++= Seq(r.frontier, r.seen)
+      chain.join(r.frontier.select(col("node").as("src")), Seq("src"))
+        .select(col("dst").as("node")).join(r.seen, Seq("node"), "left_anti")
+        .withColumn("d", lit(r.round))
+    }
+    assert(handed.size == 6 && handed.forall(_.queryExecution.logical.isInstanceOf[LogicalRDD]),
+      "the seed and every earlier level (and seen set) must be materialized")
+    out.queryExecution.logical match {
+      case Union(Seq(seen, last), _, _) =>
+        assert(leg(seen).isInstanceOf[LogicalRDD], seen.toString)
+        assert(!leg(last).isInstanceOf[LogicalRDD], s"the last level must not be materialized:\n$last")
+      case other => fail(s"expected seen ∪ last level, got:\n$other")
+    }
+    assert(out.collect().map(r => r.getLong(0) -> r.getInt(1)).toSet ==
+      Set(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
 
   test("directed PageRank: dangling chain 1->2->3, hand-computed round 1") {
@@ -427,8 +489,8 @@ class GraphSpec extends SparkSpec {
     // directed graph: 0→1→2→3→4→5 with a branch 1→6; seed {0}.
     // BFS distances: 0:0, 1:1, {2,6}:2, 3:3, 4:4 (5 is beyond step 4).
     // corpus walks 0,1,2,3,4 → min step per node = its index.
-    val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 6L))
-      .toDF("src", "dst")
+    val e = new Graph.RoundEdges(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 6L))
+      .toDF("src", "dst"), "src")
     val seeds = Seq(0L).toDF("node")
     val corpus = (0 to 4).map(t => (0L, t, t.toLong)).toDF("seed", "step", "node")
     val got = Graph.walkCoverage(e, seeds, corpus, maxStep = 4, nNodes = 7)
